@@ -3,6 +3,8 @@ package graft.api
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.core._
+import graft.expr.{AssignPacked, SegmentsPacked}
+import graft.expr.AssignPacked.{pick, start, unpackIdx, unpackK}
 
 /** Per-key strided-rolling feature extraction — the shape a 100 TB workload
   * actually has: millions of INDEPENDENT series (one per user / device /
@@ -48,25 +50,29 @@ object KeyedFeatures {
     b.repartition(b.sparkSession.conf.get("spark.sql.shuffle.partitions")
       .toIntOption.getOrElse(b.sparkSession.sparkContext.defaultParallelism))
 
-  // ---- packed (spec, k) decode — the segment/assignment fan-outs are
-  // native kernels emitting `specIdx << 56 | k` longs (AssignKernels.scala:
-  // one primitive array per row instead of per-spec boxed struct arrays +
-  // array_distinct, and no segment-table distinct() shuffle); the spec's
-  // static (w, st) come back via a literal when-chain, so the decoded
-  // (w, koff, seg_start) doubles are computed by the exact same IEEE ops
-  // as the replaced Column forms ------------------------------------------
-
-  private def unpackIdx(p: Column): Column =
-    shiftrightunsigned(p, graft.expr.AssignKernelUtil.KBits).cast("int")
-  private def unpackK(p: Column): Column =
-    p.bitwiseAND(lit(graft.expr.AssignKernelUtil.KMask)).cast("double")
-  /** vals(i) as a literal when-chain (≤255 static specs — no array lookup,
-    * stays in whole-stage codegen as comparisons + constants). */
-  private def pick(i: Column, vals: Seq[Double]): Column =
-    if (vals.distinct.lengthCompare(1) == 0) lit(vals.head)
-    else vals.zipWithIndex.tail.foldLeft(when(i === 0, lit(vals.head))) {
-      case (acc, (v, j)) => acc.when(i === j, lit(v))
+  /** The distinct value columns the features read, after validating the
+    * feature list and every n-ary feature's arity. */
+  private def valueColumns(unary: Seq[(String, FeatureFunc)],
+                           nary: Seq[(Seq[String], NaryFunc)]): Seq[String] = {
+    require(unary.nonEmpty || nary.nonEmpty, "no features given")
+    nary.foreach { case (cols, f) =>
+      require(cols.lengthCompare(f.arity) == 0,
+        s"${f.name} consumes ${f.arity} series, got ${cols.length}: " +
+          cols.mkString("|"))
     }
+    (unary.map(_._1) ++ nary.flatMap(_._1)).distinct
+  }
+
+  /** `__key`, `series`' internal index `__idx` and `cols`, for rows with a
+    * non-null key and index — filtered on the source columns, as in
+    * `Series.internal`. Null keys are dropped up front (the pandas-groupby
+    * convention the reference inherits); kept half-way, every equi-join
+    * below dropped their data rows and reported phantom empty windows.
+    */
+  private def keyedInternal(df: DataFrame, keyCol: String, series: Series,
+                            cols: Seq[Column]): DataFrame =
+    df.where(col(series.idxCol).isNotNull && col(keyCol).isNotNull)
+      .select(col(keyCol).as("__key") +: series.idxExpr.as("__idx") +: cols: _*)
 
   // ---- fused decomposable aggregate (r19) ---------------------------------
   //
@@ -158,26 +164,11 @@ object KeyedFeatures {
                     includeFinalWindow: Boolean = false,
                     windowKeep: Option[(Column, Column) => Column] = None,
                     windowKeepBroadcastLimit: Long = 4000000L): DataFrame = {
-    require(unary.nonEmpty || nary.nonEmpty, "no features given")
-    nary.foreach { case (cols, f) =>
-      require(cols.lengthCompare(f.arity) == 0,
-        s"${f.name} consumes ${f.arity} series, got ${cols.length}: " +
-          cols.mkString("|"))
-    }
-    val valueCols = (unary.map(_._1) ++ nary.flatMap(_._1)).distinct
+    val valueCols = valueColumns(unary, nary)
     val firstVal = valueCols.head
     val series = Series(firstVal, df, idxCol, firstVal)
-    val internal = df.select(col(keyCol).as("__key") +:
-      (series.domain match {
-        case Domain.Time     => unix_micros(col(idxCol).cast("timestamp")).cast("double")
-        case Domain.Sequence => col(idxCol).cast("double")
-      }).as("__idx") +: valueCols.map(col): _*)
-      .where(col("__idx").isNotNull)
-      // null keys: dropped up front (the pandas-groupby convention the
-      // reference inherits). Keeping them half-way was worse: the segment
-      // groupBy emitted a null-key window table but every equi-join below
-      // dropped the null-key DATA rows, reporting phantom empty windows.
-      .where(col("__key").isNotNull)
+    val internal = keyedInternal(df, keyCol, series,
+      valueCols.map(col))
 
     val w = window.amount
     val sts = strides.map(_.amount).distinct.sorted
@@ -194,11 +185,9 @@ object KeyedFeatures {
     // kernel explode; in-kernel dedup replaces the multi-stride distinct()
     val wsFlat = Seq.fill(sts.length)(w)
     val segments = boundsWide.select(col("__key"), col("__s0"),
-        explode(graft.expr.SegmentsPacked(col("__s0"), col("__e0"),
+        explode(SegmentsPacked(col("__s0"), col("__e0"),
           wsFlat, sts, includeFinalWindow, dedupOnKoff = false)).as("__p"))
-      .select(col("__key"),
-        (col("__s0") + unpackK(col("__p")) * pick(unpackIdx(col("__p")), sts))
-          .as("__seg_start"))
+      .select(col("__key"), start(col("__p"), col("__s0"), sts).as("__seg_start"))
       .select(col("__key"), col("__seg_start"),
         (col("__seg_start") + lit(w)).as("__seg_end"))
 
@@ -213,19 +202,13 @@ object KeyedFeatures {
     val withStart = internal.join(bounds, Seq("__key"))
     val assigned = withStart.select(
       col("__key") +: col("__idx") +: col("__s0") +: valueCols.map(col) :+
-        explode(graft.expr.AssignPacked(col("__idx"), col("__s0"),
+        explode(AssignPacked(col("__idx"), col("__s0"),
           col("__e0"), wsFlat, sts, includeFinalWindow)).as("__p"): _*)
       .select(col("__key") +:
-        (col("__s0") + unpackK(col("__p")) * pick(unpackIdx(col("__p")), sts))
-          .as("__seg_start") +:
+        start(col("__p"), col("__s0"), sts).as("__seg_start") +:
         col("__idx") +: valueCols.map(col): _*)
 
-    val anchorRaw = windowIdx match {
-      case "end"    => col("__seg_end")
-      case "middle" => col("__seg_start") + (col("__seg_end") - col("__seg_start")) / 2
-      case "begin"  => col("__seg_start")
-      case x => throw new IllegalArgumentException(s"bad windowIdx $x")
-    }
+    val anchorRaw = graft.segment.Segmenter.anchor(windowIdx)
 
     // Keyed window-level sampling gate — the single-series windowKeep's
     // twin: count rows per (key, window start) off the assignment explode
@@ -332,25 +315,10 @@ object KeyedFeatures {
       return calculateWide(df, keyCol, idxCol, windows.head._1,
         windows.head._2, unary, nary, windowIdx, includeFinalWindow,
         windowKeep, windowKeepBroadcastLimit)
-    require(unary.nonEmpty || nary.nonEmpty, "no features given")
-    nary.foreach { case (cols, f) =>
-      require(cols.lengthCompare(f.arity) == 0,
-        s"${f.name} consumes ${f.arity} series, got ${cols.length}: " +
-          cols.mkString("|"))
-    }
-    val valueCols = (unary.map(_._1) ++ nary.flatMap(_._1)).distinct
+    val valueCols = valueColumns(unary, nary)
     val series = Series(valueCols.head, df, idxCol, valueCols.head)
-    val internal = df.select(col(keyCol).as("__key") +:
-      (series.domain match {
-        case Domain.Time     => unix_micros(col(idxCol).cast("timestamp")).cast("double")
-        case Domain.Sequence => col(idxCol).cast("double")
-      }).as("__idx") +: valueCols.map(col): _*)
-      .where(col("__idx").isNotNull)
-      // null keys: dropped up front (the pandas-groupby convention the
-      // reference inherits). Keeping them half-way was worse: the segment
-      // groupBy emitted a null-key window table but every equi-join below
-      // dropped the null-key DATA rows, reporting phantom empty windows.
-      .where(col("__key").isNotNull)
+    val internal = keyedInternal(df, keyCol, series,
+      valueCols.map(col))
     val specs = windows.map { case (win, sts) =>
       (win, sts.map(_.amount).distinct.sorted)
     }
@@ -371,7 +339,7 @@ object KeyedFeatures {
       val si = unpackIdx(col("__p"))
       val koff = unpackK(col("__p")) * pick(si, specSt)
       boundsWide.select(col("__key"), col("__s0"),
-          explode(graft.expr.SegmentsPacked(col("__s0"), col("__e0"),
+          explode(SegmentsPacked(col("__s0"), col("__e0"),
             specW, specSt, includeFinalWindow, dedupOnKoff = true)).as("__p"))
         .select(col("__key"), pick(si, specW).as("__w"), col("__s0"),
           koff.as("__koff"), (col("__s0") + koff).as("__seg_start"))
@@ -390,11 +358,10 @@ object KeyedFeatures {
       val si = unpackIdx(col("__p"))
       withStart.select(
         col("__key") +: col("__idx") +: col("__s0") +: valueCols.map(col) :+
-          explode(graft.expr.AssignPacked(col("__idx"), col("__s0"),
+          explode(AssignPacked(col("__idx"), col("__s0"),
             col("__e0"), specW, specSt, includeFinalWindow)).as("__p"): _*)
         .select(col("__key") +: pick(si, specW).as("__w") +:
-          (col("__s0") + unpackK(col("__p")) * pick(si, specSt))
-            .as("__seg_start") +:
+          start(col("__p"), col("__s0"), specSt).as("__seg_start") +:
           col("__idx") +: valueCols.map(col): _*)
     }
 
@@ -420,7 +387,7 @@ object KeyedFeatures {
       val si = unpackIdx(col("__p"))
       val exploded = withStart.select(
           col("__key") +: col("__s0") +:
-          explode(graft.expr.AssignPacked(col("__idx"), col("__s0"),
+          explode(AssignPacked(col("__idx"), col("__s0"),
             col("__e0"), specW, specSt, includeFinalWindow)).as("__p") +:
           valueCols.map(col): _*)
         .select(col("__key") +: pick(si, specW).as("__w") +:
@@ -558,19 +525,8 @@ object KeyedFeatures {
         col(groupCol).isNotNull && !isnan(col(groupCol))
       case _ => col(groupCol).isNotNull
     }
-    val internal = df.select(
-      col(keyCol).as("__key") +:
-        (series.domain match {
-          case Domain.Time     => unix_micros(col(idxCol).cast("timestamp")).cast("double")
-          case Domain.Sequence => col(idxCol).cast("double")
-        }).as("__idx") +:
-        when(gOk, col(groupCol)).as("__grp") +: valueCols.map(col): _*)
-      .where(col("__idx").isNotNull)
-      // null keys: dropped up front (the pandas-groupby convention the
-      // reference inherits). Keeping them half-way was worse: the segment
-      // groupBy emitted a null-key window table but every equi-join below
-      // dropped the null-key DATA rows, reporting phantom empty windows.
-      .where(col("__key").isNotNull)
+    val internal = keyedInternal(df, keyCol, series,
+      when(gOk, col(groupCol)).as("__grp") +: valueCols.map(col))
     // change-flag against the last NON-NULL group value, so null-group rows
     // neither start runs nor break them; inclusive running sum = run id
     val wOrd = Window.partitionBy("__key").orderBy("__idx")

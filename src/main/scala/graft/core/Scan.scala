@@ -563,6 +563,13 @@ object Scan {
   def groupRunScan(df: DataFrame, orderCols: Seq[String], grpCol: String,
                    boundCol: String, runCol: String,
                    gmaxCol: String): DataFrame = {
+    // scratch names are replaced (withColumn) or joined ambiguously
+    Seq("__flag", "__loc", "__tot", "__first", "__last", "__gmx",
+      "__prevLast", "__c", "__adj", "__off").foreach(r =>
+      require(!df.columns.contains(r), s"$r is reserved by groupRunScan"))
+    Seq(runCol, gmaxCol).foreach(r =>
+      require(!df.columns.contains(r),
+        s"output column $r already exists on the input"))
     val p = ranged(df, orderCols)
     val ord = orderCols.map(col)
     val w = Window.partitionBy("__pid").orderBy(ord: _*)

@@ -71,10 +71,11 @@ final case class Series(name: String, df: DataFrame, idxCol: String,
     * NULL index rows are dropped (they are unorderable). A tz-declared
     * wall-clock (NTZ) index is interpreted in that zone, so `__idx` is the
     * true epoch instant.
+    * The null filter reads the source column (each `idxExpr` branch is null
+    * exactly when its input is); on `__idx` it would convert every index
+    * twice, once in the pushed-down filter and once in the projection.
     */
-  def internal: DataFrame =
-    df.select(idxExpr.as("__idx"), col(valueCol).as("__v"))
-      .where(col("__idx").isNotNull)
+  def internal: DataFrame = internalPlus()
 
   /** [[internal]] plus EXTRA source columns (src → alias), one scan — the
     * shared feed for fused same-source pipelines (the G3 single-scan path
@@ -82,11 +83,11 @@ final case class Series(name: String, df: DataFrame, idxCol: String,
     * instead of one `internal` scan per series).
     */
   private[graft] def internalPlus(extra: (String, String)*): DataFrame =
-    df.select(idxExpr.as("__idx") +: col(valueCol).as("__v") +:
+    df.where(col(idxCol).isNotNull)
+      .select(idxExpr.as("__idx") +: col(valueCol).as("__v") +:
         extra.toIndexedSeq.map { case (src, as) => col(src).as(as) }: _*)
-      .where(col("__idx").isNotNull)
 
-  private lazy val idxExpr: org.apache.spark.sql.Column = {
+  private[graft] lazy val idxExpr: org.apache.spark.sql.Column = {
     (domain, idxType, tz) match {
       case (Domain.Time, TimestampNTZType, Some(zone)) =>
         // wall time in `zone` → true epoch instant, via a native codegen'd

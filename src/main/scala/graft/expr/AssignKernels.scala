@@ -4,34 +4,33 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, TernaryExpression, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.functions.{lit, shiftrightunsigned, when}
 import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
 
-/** Native kernels for the keyed-rolling W5 arithmetic — the two per-row /
-  * per-key fan-outs of `KeyedFeatures` (reference semantics:
+/** Native kernels for the strided-rolling W5 arithmetic — the one
+  * window-assignment primitive of both APIs (reference semantics:
   * tsflex/features/segmenter/strided_rolling.py's window/stride start
-  * arithmetic, applied per entity):
+  * arithmetic):
   *
   *   - ASSIGNMENT: every data row joins the (window, stride) segments that
-  *     contain it — k in [kmin, min(kmax, nb-1)] per spec (strided_rolling's
-  *     half-open [start, start+window) membership solved for the segment
-  *     counter k, clamped to the key's own grid so no join is needed to
-  *     discard out-of-grid starts);
+  *     contain it — k in [kmin, min(kmax, nb-1)] per spec (half-open
+  *     [start, start+window) membership solved for the segment counter k,
+  *     clamped to the grid so no join discards out-of-grid starts). Used by
+  *     `Segmenter.assign` (FeatureCollection: one grid, literal bounds) and
+  *     `KeyedFeatures` (each key's grid, joined bounds);
   *   - SEGMENTS: every key emits its own segment grid — k in [0, nb) per
-  *     spec.
+  *     spec (`KeyedFeatures`; the single-series grid is a `spark.range`).
   *
   * The replaced Column forms built one BOXED array per row per spec
-  * (`transform(sequence(kmin, kmax), k => struct(w, s0 + k·st))`), then
-  * `array_distinct(concat(...))` over the boxed structs — the same
-  * per-element-allocation signature the entropy kernels killed — and the
-  * segment grid deduped with a full `.distinct()` SHUFFLE of the segment
-  * table. Both kernels emit ONE primitive long array per row:
-  * `specIdx << 56 | k`, deduped in-loop on the exact double pair the old
-  * forms deduped on, so the downstream decode
-  * (`shiftrightunsigned`/`bitwiseAND` + a literal when-chain over the ≤255
-  * static specs) reproduces bit-identical (w, koff, seg_start) doubles in
-  * whole-stage codegen. Differential-tested against the replaced Column
-  * forms in AssignKernelsSpec.
+  * (`transform(sequence(kmin, kmax), k => s0 + k·st)`, then
+  * `array_distinct(concat(...))`): a higher-order function, which drops the
+  * assignment out of whole-stage codegen. Both kernels emit ONE primitive
+  * long array per row, `specIdx << 56 | k`, deduped in-loop on the exact
+  * doubles the old forms deduped on, so the decode beside [[AssignPacked]]
+  * reproduces bit-identical (w, koff, seg_start) doubles in whole-stage
+  * codegen. Differential-tested against the replaced forms in
+  * AssignKernelsSpec.
   *
   * Floor semantics match Spark's `floor(double)→long` (`Math.floor(d)` then
   * a saturating long cast: NaN→0, ±Inf→Long.Min/Max), so NaN indexes emit
@@ -87,6 +86,12 @@ object AssignKernelUtil {
     }
   }
 
+  /** First segment counter whose window contains t. +Inf lies in no window
+    * (its floor + 1 would wrap to k = 0: every segment of a finite grid). */
+  private def kminOf(t: Double, s0: Double, w: Double, st: Double): Long =
+    if (t == Double.PositiveInfinity) Long.MaxValue
+    else math.max(0L, floorL((t - s0 - w) / st) + 1L)
+
   private def checkK(k: Long): Long = {
     if (k > KMask) throw new IllegalStateException(
       s"segment counter $k exceeds 2^$KBits — stride too fine for the span")
@@ -122,7 +127,7 @@ object AssignKernelUtil {
     var total = 0L
     var i = 0
     while (i < n) {
-      val kmin = math.max(0L, floorL((t - s0 - ws(i)) / sts(i)) + 1L)
+      val kmin = kminOf(t, s0, ws(i), sts(i))
       val kmax = math.min(floorL((t - s0) / sts(i)),
         nbOf(s0, e0, ws(i), sts(i), includeFinal) - 1L)
       if (kmax >= kmin) total += checkK(kmax) - kmin + 1L
@@ -142,7 +147,7 @@ object AssignKernelUtil {
     i = 0
     while (i < n) {
       val w = ws(i); val st = sts(i)
-      var k = math.max(0L, floorL((t - s0 - w) / st) + 1L)
+      var k = kminOf(t, s0, w, st)
       val kmax = math.min(floorL((t - s0) / st),
         nbOf(s0, e0, w, st, includeFinal) - 1L)
       while (k <= kmax) {
@@ -242,8 +247,10 @@ object AssignKernelUtil {
       if (m == cap) packed else java.util.Arrays.copyOf(packed, m))
   }
 
-  private def nbOf(s0: Double, e0: Double, w: Double, st: Double,
-                   includeFinal: Boolean): Long = {
+  /** W1 grid size (also `Segmenter.nbSegments`, so the segment table and
+    * the assignment's grid clamp cannot disagree). */
+  def nbOf(s0: Double, e0: Double, w: Double, st: Double,
+           includeFinal: Boolean): Long = {
     // floorL saturates at Long.MaxValue for astronomically fine strides —
     // the naive +1 then WRAPS negative and max(…, 0) turns the overflow
     // into a silently EMPTY grid, skipping the 2^56 checkK guard both here
@@ -262,6 +269,7 @@ private[expr] trait PackedPairKernel { self: Expression =>
   require(ws.length == sts.length && ws.nonEmpty, "ws/sts must align")
   require(ws.length <= 255, "at most 255 (window, stride) specs")
   require(sts.forall(_ > 0), "strides must be positive")
+  require(ws.forall(_ > 0), "windows must be positive")
   @transient protected lazy val wsArr: Array[Double] = ws.toArray
   @transient protected lazy val stsArr: Array[Double] = sts.toArray
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
@@ -297,6 +305,27 @@ object AssignPacked {
     ColumnBridge.column(AssignPacked(ColumnBridge.expression(idx),
       ColumnBridge.expression(s0), ColumnBridge.expression(e0), ws, sts,
       includeFinal))
+
+  // ---- packed (spec, k) decode of AssignPacked and SegmentsPacked output:
+  // the static (w, st) come back via a literal when-chain, so the decoded
+  // doubles come from the same IEEE ops as the replaced Column forms ------
+
+  /** Spec index of a packed pair. */
+  def unpackIdx(p: Column): Column =
+    shiftrightunsigned(p, AssignKernelUtil.KBits).cast("int")
+  /** Segment counter k of a packed pair, as a double. */
+  def unpackK(p: Column): Column =
+    p.bitwiseAND(lit(AssignKernelUtil.KMask)).cast("double")
+  /** vals(i) as a literal when-chain (≤255 static specs — no array lookup,
+    * stays in whole-stage codegen as comparisons + constants). */
+  def pick(i: Column, vals: Seq[Double]): Column =
+    if (vals.distinct.lengthCompare(1) == 0) lit(vals.head)
+    else vals.zipWithIndex.tail.foldLeft(when(i === 0, lit(vals.head))) {
+      case (acc, (v, j)) => acc.when(i === j, lit(v))
+    }
+  /** Segment start `s0 + k·st` of a packed pair over strides `sts`. */
+  def start(p: Column, s0: Column, sts: Seq[Double]): Column =
+    s0 + unpackK(p) * pick(unpackIdx(p), sts)
 }
 
 /** Per-key segment grid as packed (spec, k) longs — see

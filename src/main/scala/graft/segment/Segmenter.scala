@@ -3,6 +3,7 @@ package graft.segment
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core._
+import graft.expr.{AssignKernelUtil, AssignPacked}
 
 /** Bounds of the data range to segment (P2/P3). */
 final case class Bounds(start: Double, end: Double)
@@ -20,25 +21,29 @@ final case class Bounds(start: Double, end: Double)
   *   (half-open, searchsorted-'left' on both sides — W5).
   *
   * Scale design: for regular strides, window→row assignment is ARITHMETIC —
-  * each row computes its own overlapping segment-start set via
-  * `sequence(kmin, kmax)` + `explode` (pure whole-stage-codegen math, no
-  * join, no shuffle before the final partial-aggregated `groupBy`). The
-  * segment table itself is built lazily with `spark.range` (never
+  * each row computes its own overlapping segment-start set in the native
+  * `AssignPacked` kernel (the one assignment primitive `KeyedFeatures`
+  * uses too) and `explode`s it, decoded in whole-stage codegen: no join,
+  * no shuffle before the final partial-aggregated `groupBy`. The segment
+  * table itself is built lazily with `spark.range` (never
   * driver-materialized) and only joined — broadcast — to restore
-  * empty-window rows (W7). Irregular/manual segments fall back to a
-  * broadcast range join.
+  * empty-window rows (W7). Manual segments (arbitrary user intervals) use
+  * a broadcast range join.
   */
 object Segmenter {
 
-  /** One regular stride's generation parameters. */
-  final case class StrideSpec(stride: Double, nb: Long)
+  /** A regular segmentation's assignment parameters. The bounds and
+    * `includeFinalWindow` ride along so the kernel's grid clamp reproduces
+    * [[nbSegments]] per stride; `strides` are distinct and sorted. */
+  final case class Regular(bounds: Bounds, window: Double,
+                           strides: Seq[Double], includeFinalWindow: Boolean)
 
   /** A planned segmentation: lazily-built segment table + (for regular
     * strides) the arithmetic-assignment spec.
     */
   final case class SegmentPlan(
       segments: DataFrame, // __seg_id, __seg_start, __seg_end (Double)
-      regular: Option[(Double, Double, Seq[StrideSpec])], // (start0, window, strides)
+      regular: Option[Regular],
       winRender: String)
 
   /** P3 bound methods (reference: tsflex/features/utils.py:77-99):
@@ -80,13 +85,11 @@ object Segmenter {
     }
   }
 
-  /** W1: number of segments for one stride. */
+  /** W1: number of segments for one stride — the assignment kernel's own
+    * grid size, so the segment table and the assignment clamp agree. */
   def nbSegments(b: Bounds, window: Double, stride: Double,
-                 includeFinalWindow: Boolean): Long = {
-    var nb = math.max(math.floor((b.end - b.start - window) / stride).toLong + 1, 0L)
-    if (includeFinalWindow && b.start + stride * nb <= b.end) nb += 1
-    nb
-  }
+                 includeFinalWindow: Boolean): Long =
+    AssignKernelUtil.nbOf(b.start, b.end, window, stride, includeFinalWindow)
 
   /** W1–W3: regular segment plan for one window and one-or-more strides.
     * Multi-stride = set union of per-stride starts, deduped and sorted (W2,
@@ -96,18 +99,23 @@ object Segmenter {
               strides: Seq[Double], includeFinalWindow: Boolean,
               winRender: String): SegmentPlan = {
     require(strides.nonEmpty, "at least one stride required")
-    val specs = strides.distinct.sorted.map(s =>
-      StrideSpec(s, nbSegments(b, window, s, includeFinalWindow)))
-    val perStride = specs.map { sp =>
-      spark.range(sp.nb)
-        .select((lit(b.start) + col("id").cast("double") * lit(sp.stride)).as("__seg_start"))
-    }
-    var segs = perStride.reduce(_.unionAll(_))
-    if (specs.length > 1) segs = segs.distinct()
+    // a zero stride or infinite bounds saturate nbSegments; NaN fails too
+    require(!b.start.isInfinite && !b.end.isInfinite,
+      s"segmentation bounds must be finite, got $b")
+    require(window > 0, s"window must be positive, got $window ($winRender)")
+    strides.foreach(st =>
+      require(st > 0, s"stride must be positive, got $st (window $winRender)"))
+    val sts = strides.distinct.sorted
+    var segs = sts.map { st =>
+      spark.range(nbSegments(b, window, st, includeFinalWindow))
+        .select((lit(b.start) + col("id").cast("double") * lit(st)).as("__seg_start"))
+    }.reduce(_.unionAll(_))
+    if (sts.length > 1) segs = segs.distinct()
     val segments = segs
       .select(col("__seg_start"), (col("__seg_start") + lit(window)).as("__seg_end"))
       .withColumn("__seg_id", col("__seg_start"))
-    SegmentPlan(segments, Some((b.start, window, specs)), winRender)
+    SegmentPlan(segments, Some(Regular(b, window, sts, includeFinalWindow)),
+      winRender)
   }
 
   /** W4: manual segments from user-supplied start and/or end arrays
@@ -137,29 +145,23 @@ object Segmenter {
     * row per (row, containing segment) pair, tagged `__seg_id`.
     *
     * Regular path: arithmetic explode — for stride st, row t overlaps
-    * starts with k ∈ [floor((t-s0-w)/st)+1, floor((t-s0)/st)] ∩ [0, nb).
-    * Multi-stride: per-row union of the per-stride start sets
-    * (`array_distinct`), mirroring the reference's global `np.unique`.
+    * starts with k ∈ [floor((t-s0-w)/st)+1, floor((t-s0)/st)] ∩ [0, nb),
+    * emitted by the `AssignPacked` kernel as packed (stride, k) longs and
+    * decoded to `__seg_id = s0 + k·st`. Multi-stride: the kernel dedups the
+    * per-row union of the per-stride starts on their doubles, mirroring the
+    * reference's global `np.unique`.
     *
     * Manual path: broadcast range join (segment tables are small relative
     * to data; for huge manual tables swap in a range-join strategy).
     */
   def assign(rows: DataFrame, plan: SegmentPlan): DataFrame = plan.regular match {
-    case Some((s0, w, specs)) =>
-      val t = col("__idx")
-      val arrays: Seq[Column] = specs.map { sp =>
-        val kmin = greatest(lit(0L),
-          (floor((t - lit(s0) - lit(w)) / lit(sp.stride)) + lit(1)).cast("long"))
-        val kmax = least(lit(sp.nb - 1),
-          floor((t - lit(s0)) / lit(sp.stride)).cast("long"))
-        when(kmax >= kmin,
-          transform(sequence(kmin, kmax),
-            k => lit(s0) + k.cast("double") * lit(sp.stride)))
-          .otherwise(array().cast("array<double>"))
-      }
-      val all = if (arrays.length == 1) arrays.head
-                else array_distinct(concat(arrays: _*))
-      rows.select(col("*"), explode(all).as("__seg_id"))
+    case Some(r) =>
+      val s0 = lit(r.bounds.start)
+      rows.select(col("*"), explode(AssignPacked(col("__idx").cast("double"),
+          s0, lit(r.bounds.end), r.strides.map(_ => r.window), r.strides,
+          r.includeFinalWindow)).as("__p"))
+        .withColumn("__seg_id", AssignPacked.start(col("__p"), s0, r.strides))
+        .drop("__p")
     case None =>
       val segs = plan.segments
       rows.join(broadcast(segs),

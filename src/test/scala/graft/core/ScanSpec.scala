@@ -186,6 +186,26 @@ class ScanSpec extends SparkSpec {
     }
   }
 
+  test("groupRunScan: reserved scratch and output names collide loudly") {
+    // a caller column named like a scratch column would otherwise be
+    // silently replaced (__flag/__loc) or make the offset join ambiguous
+    val d = data.withColumn("gn", lit(0))
+    val ok = Scan.groupRunScan(d, Seq("idx", "gn"), "g", "idx", "run", "gmx")
+    assert(ok.columns.toSet == (d.columns ++ Seq("run", "gmx")).toSet)
+    Seq("__flag", "__loc", "__tot", "__first", "__last", "__gmx",
+      "__prevLast", "__c", "__adj", "__off", "run", "gmx").foreach { c =>
+      val e = intercept[IllegalArgumentException] {
+        Scan.groupRunScan(d.withColumn(c, lit(1L)), Seq("idx", "gn"), "g",
+          "idx", "run", "gmx")
+      }
+      assert(e.getMessage.contains(c), s"$c: ${e.getMessage}")
+    }
+    intercept[IllegalArgumentException] {
+      Scan.groupRunScan(d.withColumn("__pid", lit(3)), Seq("idx", "gn"), "g",
+        "idx", "run", "gmx")
+    }
+  }
+
   test("keyedRank: checkpoint-fed input, stable across evaluations (regression)") {
     // same hazard class as the fillForward regression above: the local-rank
     // window and the per-(partition, key) offset summary must agree on

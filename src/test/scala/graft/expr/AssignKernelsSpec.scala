@@ -1,13 +1,14 @@
 package graft.expr
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
 
-/** Differential spec for the packed keyed-rolling kernels: the kernel +
+/** Differential spec for the packed assignment kernels: the kernel +
   * decode must reproduce the REPLACED Column formulations bit-for-bit —
   * same (w, seg_start) doubles, same multiset (dedup conventions included),
-  * on dense/sparse/negative/NaN indexes and fractional strides.
+  * on dense/sparse/negative/NaN indexes and fractional strides — for both
+  * consumers: the keyed forms and `Segmenter.assign`'s single-series form.
   */
 class AssignKernelsSpec extends SparkSpec {
 
@@ -63,7 +64,6 @@ class AssignKernelsSpec extends SparkSpec {
     * every spec's oldSegments grid. */
   private def oldGrid(s0: Column, e0: Column, ws: Seq[Double],
                       sts: Seq[Double], includeFinal: Boolean) = {
-    import org.apache.spark.sql.DataFrame
     def one(base: DataFrame, w: Double, st: Double): DataFrame =
       base.select(col("t"),
           explode(oldSegments(s0, e0, w, st, includeFinal)).as("k"))
@@ -252,6 +252,77 @@ class AssignKernelsSpec extends SparkSpec {
       .collect().map(r => (r.getDouble(0), r.getDouble(1), r.getDouble(2),
         r.getDouble(3))).toSeq.sorted
     assert(want.length > 64 && got == want)
+  }
+
+  /** The replaced `Segmenter.assign` regular branch, verbatim: per stride
+    * a boxed `transform(sequence(kmin, kmax), …)` clamped to the stride's
+    * nb, multi-stride unioned with `array_distinct(concat(...))`. */
+  private def oldSegmenterAssign(rows: DataFrame, s0: Double, w: Double,
+                                 specs: Seq[(Double, Long)]): DataFrame = {
+    val t = col("__idx")
+    val arrays: Seq[Column] = specs.map { case (stride, nb) =>
+      val kmin = greatest(lit(0L),
+        (floor((t - lit(s0) - lit(w)) / lit(stride)) + lit(1)).cast("long"))
+      val kmax = least(lit(nb - 1),
+        floor((t - lit(s0)) / lit(stride)).cast("long"))
+      when(kmax >= kmin,
+        transform(sequence(kmin, kmax),
+          k => lit(s0) + k.cast("double") * lit(stride)))
+        .otherwise(array().cast("array<double>"))
+    }
+    val all = if (arrays.length == 1) arrays.head
+              else array_distinct(concat(arrays: _*))
+    rows.select(col("*"), explode(all).as("__seg_id"))
+  }
+
+  /** (index, __seg_id) multiset as raw IEEE bits — bit identity, not `==`
+    * (-0.0 and 0.0 stay apart). */
+  private def bits(df: DataFrame): Seq[(Option[Long], Long)] =
+    df.select("__idx", "__seg_id").collect().toSeq.map { r =>
+      (if (r.isNullAt(0)) None
+       else Some(java.lang.Double.doubleToRawLongBits(r.getDouble(0))),
+        java.lang.Double.doubleToRawLongBits(r.getDouble(1)))
+    }.sorted
+
+  test("Segmenter.assign ≡ the replaced transform/array_distinct form, " +
+    "bit for bit") {
+    import spark.implicits._
+    import graft.segment.{Bounds, Segmenter}
+    // (bounds, window, strides): integral single and multi stride (the
+    // multi set has coinciding starts for the dedup), fractional sequence
+    // strides, and spans shorter than the window (empty grid, or a single
+    // final window with includeFinal)
+    val cases = Seq(
+      (Bounds(0, 40), 6.0, Seq(2.0)),
+      (Bounds(0, 40), 6.0, Seq(2.0, 3.0, 4.0)),
+      (Bounds(-3.2, 17.9), 2.5, Seq(0.7)),
+      (Bounds(-3.2, 17.9), 2.5, Seq(0.7, 1.1, 0.3)),
+      (Bounds(0.1, 0.9), 0.35, Seq(0.1, 0.05)),
+      (Bounds(0, 2), 5.0, Seq(1.0)),
+      (Bounds(-1.5, 0.5), 5.0, Seq(0.5, 2.0)))
+    for ((b, w, sts) <- cases; includeFinal <- Seq(false, true)) {
+      val ts: Seq[java.lang.Double] = (randDoubles(200, 31L).map(_ - 2.0) ++
+        Seq(b.start, b.end, b.start + w, -7.25, -0.0, 0.0, Double.NaN))
+        .map(java.lang.Double.valueOf) :+ null
+      val rows = ts.toDF("__idx").withColumn("__v", lit(1.0))
+      val plan = Segmenter.regular(spark, b, w, sts, includeFinal, "w")
+      val specs = sts.distinct.sorted.map(st =>
+        st -> Segmenter.nbSegments(b, w, st, includeFinal))
+      // the replaced form only ever saw `Series.internal` rows, which drop
+      // null indexes: fed one directly, its greatest/least skipped the null
+      // and assigned the row to EVERY segment. The kernel emits nothing for
+      // it, so the reference runs on the non-null rows and the kernel on all
+      val want = bits(oldSegmenterAssign(rows.where(col("__idx").isNotNull),
+        b.start, w, specs))
+      val got = bits(Segmenter.assign(rows, plan))
+      assert(got == want, s"$b w=$w sts=$sts includeFinal=$includeFinal: " +
+        s"only kernel ${got.diff(want).take(5)}, only old ${want.diff(got).take(5)}")
+      // ±Inf lies in no window of a finite grid (the replaced form's
+      // floor(+Inf) + 1 overflowed: every segment, or an ANSI error)
+      val inf = Seq(Double.PositiveInfinity, Double.NegativeInfinity)
+        .toDF("__idx")
+      assert(Segmenter.assign(inf, plan).isEmpty)
+    }
   }
 
   test("packed k guard: counter past 2^56 throws instead of corrupting") {
